@@ -52,6 +52,9 @@ from .chunking import CHUNK_COL, perfect_shuffle_salts, with_chunk_id
 
 # shuffle/group relabeling column (see encode_chunks straggler notes)
 SALT_COL = "__chunk_salt"
+# largest chunk count encoded one chunk per task (perfect-hash salt);
+# above it tasks carry many chunks each
+MAX_SALTED_CHUNKS = 8192
 
 CHUNK_SCHEMA = T.StructType([
     T.StructField("chunk_id", T.IntegerType(), False),
@@ -225,7 +228,8 @@ def _encode_group_fn(key_col: str, columns: list[str], codecs: dict,
 
 def encode_chunks(df: DataFrame, key: str, codecs: dict,
                   n_chunks: int, sort_cols: list[str] | None = None,
-                  store_dir: str | None = None) -> DataFrame:
+                  store_dir: str | None = None,
+                  max_partitions: int | None = None) -> DataFrame:
     """Encode `df` into per-(chunk, column) payload rows.
 
     `codecs` maps column → codec name or codec-plan dict (shared state).
@@ -261,7 +265,10 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
     partition, zero empties (the group fn reads the REAL chunk id from
     the chunk column, so ids stay 0..n-1 everywhere downstream). Beyond
     8192 chunks (the 100 TB regime, ~3M chunks) tasks carry ~50 chunks
-    each under a 65536-partition cap and collisions average out."""
+    each under a 65536-partition cap and collisions average out;
+    `max_partitions` lowers that cap further when the rows being encoded
+    are few (plans.pipeline sizes it from the bytes this run encodes), so
+    the task count follows the data rather than the chunk count."""
     columns = [f.name for f in df.schema.fields]
     aschema = arrow_schema_for(df.schema)
     sort_cols = [c for c in (sort_cols or []) if c != key] + [key]
@@ -282,7 +289,7 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
                           skip_store_write=skip_write)
     out_schema = MANIFEST_SCHEMA if store_dir is not None else CHUNK_SCHEMA
     order = [F.asc_nulls_last(c) for c in sort_cols]
-    if n_chunks <= 8192:
+    if n_chunks <= MAX_SALTED_CHUNKS:
         salts = perfect_shuffle_salts(n_chunks)
         salt_col = F.element_at(
             F.array(*[F.lit(v) for v in salts]),
@@ -298,7 +305,7 @@ def encode_chunks(df: DataFrame, key: str, codecs: dict,
             chunked = chunked.sortWithinPartitions(
                 F.asc(SALT_COL), *order)
         return chunked.groupBy(SALT_COL).applyInArrow(fn, schema=out_schema)
-    n_part = min(max(n_chunks, 1), 65536)
+    n_part = min(max(n_chunks, 1), 65536, max_partitions or 65536)
     chunked = chunked.repartition(n_part, CHUNK_COL)
     if presort:
         chunked = chunked.sortWithinPartitions(F.asc(CHUNK_COL), *order)

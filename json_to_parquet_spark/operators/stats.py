@@ -122,7 +122,8 @@ def global_column_stats(df: DataFrame, columns: list[str]) -> DataFrame:
     """Built-in single-pass aggregate: per-column core stats.
 
     Returns one row per column: rows, non_null, distinct_est, avg_len
-    (strings/binary; null otherwise), min/max rendered as strings.
+    (strings/binary, in bytes — octet_length, not characters, since it
+    sizes the chunk count; null otherwise), min/max rendered as strings.
     """
     aggs = [F.count(F.lit(1)).alias("__rows")]
     fields = {f.name: f.dataType for f in df.schema.fields}
@@ -130,7 +131,8 @@ def global_column_stats(df: DataFrame, columns: list[str]) -> DataFrame:
         aggs.append(F.count(F.col(c)).alias(f"{c}__nonnull"))
         aggs.append(F.approx_count_distinct(F.col(c)).alias(f"{c}__distinct"))
         if isinstance(fields[c], _BYTES_TYPES):
-            aggs.append(F.avg(F.length(F.col(c))).alias(f"{c}__avg_len"))
+            aggs.append(F.avg(F.octet_length(F.col(c)))
+                        .alias(f"{c}__avg_len"))
             aggs.append(F.lit(None).cast("string").alias(f"{c}__min"))
             aggs.append(F.lit(None).cast("string").alias(f"{c}__max"))
         else:

@@ -18,8 +18,14 @@ run (chunk payloads are deterministic — sorted by key within a chunk).
 
 Scale notes (the 100 TB design point):
   - chunk membership is a pure row function → no global coordination;
-    the only shuffle is the hash partition by chunk id, sized by
-    `target_chunk_bytes` so one chunk ≈ one comfortable Arrow group.
+    the only shuffle is the hash partition by chunk id. The default chunk
+    count follows the estimated input bytes (`_default_n_chunks`): no
+    chunk above `target_chunk_bytes`, up to 4 chunks per core for
+    balance, but no chunk below MIN_CHUNK_BYTES, so a small input (a
+    micro-batch) is not split into tasks that cost more than their data.
+  - above 8192 chunks, the encode shuffle is sized by the same rule over
+    the bytes this run encodes, not by the chunk count: a resume that has
+    little left to encode launches few tasks.
   - completed-chunk filtering and zone-map pruning are broadcast
     anti-joins against the (tiny) manifest — never a collected id list:
     at 100 TB / 32 MB chunks there are ~3M chunk ids, and an `isin`
@@ -42,7 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.chunking import CHUNK_COL, with_chunk_id
-from ..operators.encode import decode_chunks, encode_chunks, verify_roundtrip
+from ..operators.encode import (MAX_SALTED_CHUNKS, decode_chunks,
+                                encode_chunks, verify_roundtrip)
 from ..operators.selector import (build_codec_plan, choose_codecs,
                                   choose_sort_order)
 from ..operators.stats import collect_stats
@@ -72,6 +79,26 @@ def _plan_from_json(j: dict) -> dict[str, dict]:
             p["post"] = e["post"]
         plan[c] = p
     return plan
+
+# Smallest chunk the default chunk count makes. Each chunk is one Python
+# task, and a task costs ~0.2 s on its own (worker hand-off, Arrow IPC,
+# group assembly) whatever its size; at ~10 MB/s of kernel work per core,
+# a chunk below ~2 MB spends more time on its task than on its kernels.
+MIN_CHUNK_BYTES = 2 << 20
+
+
+def _default_n_chunks(est_bytes: float, parallelism: int,
+                      target_chunk_bytes: int) -> int:
+    """Chunk count for `est_bytes` of input.
+
+    Enough chunks that none exceeds `target_chunk_bytes` (the term that
+    binds at 100 TB), and up to 4 per core for balance: chunks land in
+    shuffle partitions by hash, so ~4 chunks per core keeps every core
+    busy. The balance term stops where a chunk would drop below
+    MIN_CHUNK_BYTES, so a 2.5 MiB micro-batch is 2 chunks, not 4 × cores."""
+    return max(1, math.ceil(est_bytes / target_chunk_bytes),
+               min(4 * parallelism, math.ceil(est_bytes / MIN_CHUNK_BYTES)))
+
 
 _TYPE_WIDTHS = {"bigint": 8, "double": 8, "int": 4, "float": 4, "boolean": 1,
                 "timestamp": 8, "date": 4}
@@ -200,6 +227,9 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         plan = _plan_from_json(existing["codec_plan"])
         n_chunks = existing["n_chunks"]
         sort_order = existing.get("sort_order", [key])
+        stats = existing.get("stats", {})
+        est_bytes = existing.get("est_bytes")
+        est_rows = None
     else:
         # --- pass 1: sampled stats → codec decision + shared encoder state
         t_stats = time.perf_counter()
@@ -221,19 +251,20 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             rows_sampled = next(iter(stats.values()))["rows"] if stats else 0
             est_rows = (int(rows_sampled / max(sample_fraction, 1e-9))
                         if sample_fraction < 1.0 else rows_sampled)
+        est_bytes = round(est_rows * _estimate_row_bytes(src.schema, stats))
         if n_chunks is None:
-            est_bytes = est_rows * _estimate_row_bytes(src.schema, stats)
-            # floor at 4x the cluster parallelism: chunks land in shuffle
-            # partitions by hash, so with n_chunks ≈ cores balls-in-bins
-            # collisions serialize several chunks per core while others
-            # idle; ~4 chunks/task keeps all cores busy and statistically
-            # balanced (at 100 TB the bytes term dominates anyway)
-            n_chunks = max(1, 4 * spark.sparkContext.defaultParallelism,
-                           math.ceil(est_bytes / target_chunk_bytes))
-        # persist table meta (schema + full codec-decision manifest)
+            # sized from the data: the bytes term binds at scale, the
+            # 4-per-core balance term on mid-sized tables, and the
+            # MIN_CHUNK_BYTES cap on small ones (see _default_n_chunks)
+            n_chunks = _default_n_chunks(
+                est_bytes, spark.sparkContext.defaultParallelism,
+                target_chunk_bytes)
+        # persist table meta (schema + full codec-decision manifest);
+        # est_bytes beside n_chunks shows which term of the rule bound
         with open(_meta_file(out_dir), "w") as fh:
             json.dump({"schema": src.schema.json(), "key": key,
-                       "n_chunks": n_chunks, "codecs": codecs,
+                       "n_chunks": n_chunks, "est_bytes": est_bytes,
+                       "codecs": codecs,
                        "codec_plan": _plan_to_json(plan),
                        "sort_order": sort_order,
                        "stats": {c: {k: v for k, v in s.items()
@@ -264,7 +295,8 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             # already complete → no-op (createDataFrame on an empty list
             # would raise CANNOT_INFER_EMPTY_SCHEMA)
             return {"run_id": None, "n_chunks": n_chunks,
-                    "chunks_encoded": 0, "chunks_skipped": done_count,
+                    "est_bytes": est_bytes, "chunks_encoded": 0,
+                    "chunks_skipped": done_count,
                     "rows": 0, "raw_bytes": 0, "enc_bytes": 0,
                     "codecs": codecs,
                     "wall_s": time.perf_counter() - t0,
@@ -274,6 +306,25 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         chunked = chunked.join(
             F.broadcast(todo_limited.withColumnRenamed("chunk_id", CHUNK_COL)),
             CHUNK_COL, "left_semi")
+
+    # --- above MAX_SALTED_CHUNKS a task holds many chunks, so size the
+    # encode shuffle by the bytes this run encodes, not by n_chunks (a
+    # resume with 500 rows left must not launch 60k tasks). Hashing
+    # spreads rows evenly over chunk ids, so the rows left are
+    # est_rows × todo / n_chunks; the row width comes from the pass-1
+    # stats (table_meta.json on resume).
+    max_partitions = None
+    if n_chunks > MAX_SALTED_CHUNKS:
+        if est_rows is None:
+            est_rows = src.count()  # column-less scan (parquet: metadata)
+        todo = n_chunks - done_count
+        if max_chunks_this_run is not None:
+            todo = min(todo, max_chunks_this_run)
+        todo_bytes = (est_rows * todo / n_chunks
+                      * _estimate_row_bytes(src.schema, stats))
+        max_partitions = _default_n_chunks(
+            todo_bytes, spark.sparkContext.defaultParallelism,
+            target_chunk_bytes)
 
     # --- pass 2: encode + persist chunk store
     # encode_chunks re-derives the (identical) chunk id itself
@@ -289,7 +340,8 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         os.makedirs(_chunks_path(out_dir), exist_ok=True)
         rows = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
                              sort_cols=sort_order,
-                             store_dir=_chunks_path(out_dir))
+                             store_dir=_chunks_path(out_dir),
+                             max_partitions=max_partitions)
         # the perf-isolation hook suppresses the worker chunk-file writes;
         # its manifest rows must say so, or a stray env var would yield a
         # store that claims 'ok' with zero data files (and resume would
@@ -308,7 +360,8 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
             .filter(F.col("run_id") == run_id)
     else:
         chunks = encode_chunks(chunked.drop(CHUNK_COL), key, plan, n_chunks,
-                               sort_cols=sort_order)
+                               sort_cols=sort_order,
+                               max_partitions=max_partitions)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # dynamic partition overwrite on chunk_id: a resumed run replaces
         # only the chunk directories it re-encodes. Each chunk's rows sit
@@ -361,7 +414,7 @@ def run_encode(spark: SparkSession, src: DataFrame, out_dir: str,
         F.sum("raw_bytes").alias("raw_bytes"),
         F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
     metrics = {
-        "run_id": run_id, "n_chunks": n_chunks,
+        "run_id": run_id, "n_chunks": n_chunks, "est_bytes": est_bytes,
         "chunks_encoded": agg["chunks"] or 0,
         "chunks_skipped": done_count,
         "rows": int(agg["rows"] or 0),

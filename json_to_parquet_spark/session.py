@@ -11,6 +11,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DEFAULT_MEM_MB = 16 << 10
+
+
+def _default_mem(meminfo: str = "/proc/meminfo") -> str:
+    """JVM memory default: half of the host's MemTotal, capped at 16g.
+    The other half is left to the Python workers (one per core, each
+    holding a chunk's Arrow buffers) and the page cache; a fixed 16g
+    would exceed the whole host on a small machine."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048
+                    return f"{min(_MAX_DEFAULT_MEM_MB, half_mb)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{_MAX_DEFAULT_MEM_MB}m"
+
 
 def get_spark(app: str = "json_to_parquet_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -42,6 +60,7 @@ def get_spark(app: str = "json_to_parquet_spark", cores: int | None = None,
     if pkg_parent not in prev.split(os.pathsep):
         os.environ["PYTHONPATH"] = (
             f"{pkg_parent}{os.pathsep}{prev}" if prev else pkg_parent)
+    default_mem = _default_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -55,11 +74,12 @@ def get_spark(app: str = "json_to_parquet_spark", cores: int | None = None,
         # arrive as ONE Arrow batch: batch boundaries cost an IPC flush +
         # buffer re-assembly each, measured ~5% of encode wall at 20000
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem))
         # local[] mode ignores this; local-cluster / standalone executors
         # default to a 1g heap unless told otherwise
         .config("spark.executor.memory",
-                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "16g"))
+                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", default_mem))
         .config("spark.ui.enabled", "false")
         # \r-refreshed progress bars share bench.py's final stdout line
         # with its one-line JSON result, breaking newline-split parsers
@@ -68,10 +88,16 @@ def get_spark(app: str = "json_to_parquet_spark", cores: int | None = None,
         # Arrow IPC keeps many threads in JNI critical regions; the JVM
         # default of 2 GCLocker allocation retries causes spurious
         # "Retried waiting for GCLocker too often" stalls/failures at
-        # high parallelism (JDK-8192647) — raise the retry budget
+        # high parallelism (JDK-8192647) — raise the retry budget.
+        # G1 sizes its regions from the heap: 8 MB at 16g, 4 MB below 8g.
+        # Chunk payloads are MB-sized byte arrays, and one above half a
+        # region is a humongous allocation; with the host-derived heap on
+        # a 15 GB, 4-core host, 4 MB regions doubled the GC time of a
+        # 120k-row encode + decode run, so keep the 8 MB regions
         .config("spark.driver.extraJavaOptions",
                 "-XX:+UnlockDiagnosticVMOptions "
-                "-XX:GCLockerRetryAllocationCount=100")
+                "-XX:GCLockerRetryAllocationCount=100 "
+                "-XX:G1HeapRegionSize=8m")
         .config("spark.shuffle.compress",
                 os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
         .config("spark.io.compression.codec",

@@ -36,13 +36,17 @@ WEBPAGE_SCHEMA = T.StructType([
 
 def encode_stream(spark: SparkSession, src_dir: str, out_dir: str,
                   checkpoint_dir: str, fmt: str = "parquet",
-                  n_chunks: int = 64, trigger_once: bool = True):
+                  n_chunks: int | None = None, trigger_once: bool = True):
     """Stream web pages from a directory into an encoded chunk store.
 
     Each micro-batch runs the batch pipeline into its own sub-store
     `out_dir/batches/<batch_id>`; a replayed batch re-encodes the same
     directory deterministically (resume=False wipes any half-written
-    attempt first). Returns the StreamingQuery."""
+    attempt first). `n_chunks=None` (default) sizes each batch's chunk
+    count from its estimated bytes (plans.pipeline._default_n_chunks), so
+    a few-MiB micro-batch encodes as one or two chunks rather than paying
+    a Python task per tiny chunk; an int pins every batch to that count.
+    Returns the StreamingQuery."""
     import os
 
     from ..plans.pipeline import run_encode

@@ -1,6 +1,8 @@
 """End-to-end pipeline tests: stats → selection → encode → decode →
 bit-identity verify, plus resume-from-manifest semantics (SURVEY §5.2)."""
 
+import math
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -16,6 +18,33 @@ def fingerprint(df):
     cols = [f.name for f in df.schema.fields]
     return df.select(F.expr(
         f"bit_xor(xxhash64({', '.join(cols)}))").alias("h")).collect()[0].h
+
+
+def test_default_n_chunks_follows_bytes():
+    """The default chunk count is sized from the estimated input bytes:
+    small inputs are not split below MIN_CHUNK_BYTES, mid-sized ones get
+    4 chunks per core, and at scale the target-chunk-bytes term binds."""
+    mib = 1 << 20
+    target = 32 * mib
+    assert pipeline._default_n_chunks(2.5 * mib, 4, target) <= 2
+    assert pipeline._default_n_chunks(60 * mib, 4, target) == 16
+    tb100 = 100 * 10 ** 12
+    assert (pipeline._default_n_chunks(tb100, 4, target)
+            == math.ceil(tb100 / target))
+    assert pipeline._default_n_chunks(0, 4, target) == 1
+
+
+def test_default_mem_fits_host(tmp_path):
+    """JVM memory defaults to half of MemTotal, capped at 16g, and falls
+    back to the cap when the host's memory cannot be read."""
+    from json_to_parquet_spark.session import _default_mem
+    small = tmp_path / "small"
+    small.write_text("MemFree:  1 kB\nMemTotal:       15728640 kB\n")
+    assert _default_mem(str(small)) == "7680m"
+    big = tmp_path / "big"
+    big.write_text("MemTotal:       263000000 kB\n")
+    assert _default_mem(str(big)) == "16384m"
+    assert _default_mem(str(tmp_path / "missing")) == "16384m"
 
 
 def test_webpages_deterministic(spark, pages):

@@ -48,6 +48,15 @@ def test_collect_stats_values(spark):
     assert stats["a"]["min"] == "0" and stats["a"]["max"] == "99"
 
 
+def test_avg_len_counts_bytes(spark):
+    """avg_len sizes the chunk count, so it is in UTF-8 bytes, not
+    characters: '日本語' is 3 characters but 9 bytes, '😀😀' 2 but 8."""
+    df = spark.createDataFrame(
+        [(i, "日本語" if i % 2 else "😀😀") for i in range(10)],
+        "a long, s string")
+    assert collect_stats(df)["s"]["avg_len"] == 8.5
+
+
 def test_codec_plan_builds_shared_fsst(spark):
     df = spark.createDataFrame(
         [(i, "the quick brown fox " * 20) for i in range(500)],

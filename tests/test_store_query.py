@@ -142,7 +142,9 @@ def test_fresh_run_cleans_stale_layout(spark, tmp_path):
 def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
     """Resume filtering is a broadcast anti-join, not an isin literal
     list: with 50k completed chunks the plan must stay small and the run
-    must complete."""
+    must complete. The encode shuffle is sized from the ~80 rows left to
+    encode, not from the 60k chunk ids, so no stage launches more than a
+    handful of tasks."""
     import json
     import os
     df = spark.range(0, 500).select(
@@ -171,7 +173,17 @@ def test_resume_filter_scales_to_many_chunks(spark, tmp_path):
                    "codec_plan": {"k": {"codec": "plain"},
                                   "v": {"codec": "for"}},
                    "sort_order": ["k"]}, fh)
-    m = pipeline.run_encode(spark, df, out, key="k", n_chunks=n_chunks)
+    sc = spark.sparkContext
+    sc.setJobGroup("many-chunks", "resume over 60k chunk ids")
+    try:
+        m = pipeline.run_encode(spark, df, out, key="k", n_chunks=n_chunks)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup("many-chunks")
+              for s in st.getJobInfo(j).stageIds]
+    assert stages
+    assert max(st.getStageInfo(s).numTasks for s in stages) <= 64
     assert m["chunks_skipped"] == 50_000
     # only rows hashing OUTSIDE the 50k "done" chunks were encoded
     from json_to_parquet_spark.operators.chunking import with_chunk_id

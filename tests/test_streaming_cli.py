@@ -24,6 +24,38 @@ def test_streaming_encode(spark, tmp_path):
     assert pipeline.verify_encoded(spark, pages, out)["ok"]
 
 
+def test_streaming_encode_sizes_chunks_from_batch(spark, tmp_path):
+    """With the default n_chunks each micro-batch is sized from its own
+    bytes: a 3000-row batch (~1.5 MiB) is at most 2 chunks, not 4 per
+    core, and the sub-store records the estimate that chose the count."""
+    import glob
+    import os
+
+    from json_to_parquet_spark.sources.webpages import synth_webpages
+    src = str(tmp_path / "in")
+    pages = synth_webpages(spark, 3000, seed=9)
+    pages.write.mode("overwrite").parquet(src)
+    out = str(tmp_path / "enc")
+    q = encode_stream(spark, src, out, str(tmp_path / "ckpt"))
+    q.awaitTermination(timeout=300)
+    subs = sorted(glob.glob(os.path.join(out, "batches", "*")))
+    assert subs
+    for sub in subs:
+        files = glob.glob(os.path.join(sub, "chunks", "chunk_id=*", "*.parquet"))
+        assert 1 <= len(files) <= 2, files
+        with open(os.path.join(sub, "table_meta.json")) as fh:
+            meta = json.load(fh)
+        assert meta["n_chunks"] == pipeline._default_n_chunks(
+            meta["est_bytes"], spark.sparkContext.defaultParallelism,
+            32 << 20)
+        (metrics_file,) = glob.glob(os.path.join(sub, "metrics_*.json"))
+        with open(metrics_file) as fh:
+            metrics = json.load(fh)
+        assert metrics["est_bytes"] == meta["est_bytes"]
+        assert metrics["n_chunks"] == meta["n_chunks"]
+    assert pipeline.verify_encoded(spark, pages, out)["ok"]
+
+
 def test_windowed_event_counts(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     res = windowed_event_counts(ev, window="1 hour")
